@@ -21,7 +21,15 @@ ARROW_MAX_RECORDS_PER_BATCH = 65536
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, which a container or ``taskset`` narrows below
+    ``os.cpu_count()``)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 8
 
 
 def build_session(

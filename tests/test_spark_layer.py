@@ -7,6 +7,7 @@ nullability, input-mode scanning with comments/blank lines.
 
 from __future__ import annotations
 
+import sys
 from datetime import datetime, timezone
 
 import numpy as np
@@ -175,6 +176,62 @@ class TestTokenCodec:
         out = codec.decode_records(recs)
         assert out["lat"][0] == 52.0  # %.5f half-up
         assert out["lon"][0] == -1.89
+
+    def test_read_token_table_declares_schema(self, spark, tmp_path):
+        t = tokens.generate_token_sequences(spark, 12, records_per_doc=2)
+        path = str(tmp_path / "tokens")
+        t.write.parquet(path)
+        back = tokens.read_token_table(spark, path)
+        assert back.schema.simpleString() == t.schema.simpleString()
+        assert sorted(back.collect()) == sorted(t.collect())
+        # nothing to infer from: an empty table still has its schema
+        empty = tmp_path / "empty"
+        empty.mkdir()
+        none = tokens.read_token_table(spark, str(empty))
+        assert none.schema.simpleString() == t.schema.simpleString()
+        assert none.count() == 0
+
+
+class TestWorkerImportGuard:
+    @pytest.mark.skipif(sys.version_info >= (3, 13),
+                        reason="CPython 3.13+ has no zipimporter guard")
+    def test_guard_reaches_reused_workers(self, spark):
+        """Unpickling an engine UDF imports solarpos_spark, which installs
+        the zipimporter guard in the Python worker; the set-up of a reused
+        worker's next task then goes through it (and records the stat of
+        each archive it read)."""
+        import pyarrow as pa
+
+        from solarpos_spark import zipcache
+
+        def probe(batches):
+            import os
+            import zipimport
+
+            for _ in batches:
+                pass
+            zips = sum(isinstance(v, zipimport.zipimporter)
+                       for v in sys.path_importer_cache.values())
+            yield pa.RecordBatch.from_pylist([{
+                "pid": os.getpid(),
+                "guard": zipimport.zipimporter.invalidate_caches.__module__,
+                "zips": zips,
+                "stats": len(zipcache._read_stats),
+            }])
+
+        schema = "pid long, guard string, zips long, stats long"
+        seen, reused = set(), 0
+        for query in range(4):
+            rows = spark.range(4, numPartitions=4).mapInArrow(
+                probe, schema).collect()
+            assert len(rows) == 4
+            for r in rows:
+                assert r["guard"] == zipcache.__name__, (query, r)
+                if r["pid"] in seen:
+                    reused += 1
+                    assert r["stats"] > 0 or r["zips"] == 0, (query, r)
+            seen.update(r["pid"] for r in rows)
+        assert reused > 0
 
 
 class TestPositionOperator:

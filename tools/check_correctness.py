@@ -49,7 +49,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from solarpos_spark.plans.session import build_session
 
-    spark = build_session(cores=8, shuffle_partitions=16)
+    spark = build_session(shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
